@@ -206,14 +206,12 @@ def kmeans_quality(
                 X = np.asarray([np.asarray(v, dtype=np.int64) for v in pdf["xq"]])
                 D = _sq_dists_np(X, C)
                 j = np.argmin(D, axis=1)
-                two = np.partition(D, 1, axis=1)[:, :2]
-                yield pd.DataFrame(
-                    {
-                        "cluster": j.astype(np.int32),
-                        "d1": two[:, 0],
-                        "d2": two[:, 1],
-                    }
-                )
+                if D.shape[1] > 1:
+                    two = np.partition(D, 1, axis=1)
+                    d1, d2 = two[:, 0], two[:, 1]
+                else:  # one centroid: no second-closest, so d2 is null
+                    d1, d2 = D[:, 0], pd.array([None] * len(D), dtype="Int64")
+                yield pd.DataFrame({"cluster": j.astype(np.int32), "d1": d1, "d2": d2})
 
         per_point = pts.mapInPandas(_pp, schema="cluster int, d1 bigint, d2 bigint")
         out = (

@@ -30,7 +30,7 @@ from __future__ import annotations
 
 import os
 import zlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -208,6 +208,69 @@ def label_batch_pdf(pdf: pd.DataFrame, n_parts: int) -> pd.DataFrame:
     return out[_LABEL_COLS]
 
 
+def manifest_scan(
+    spark: SparkSession,
+    manifest: list[str],
+    per_pdf: Callable[[pd.DataFrame], pd.DataFrame],
+    schema: T.StructType | str,
+    columns: list[str] = CLIP_COLUMNS,
+    batch_rows: int = 256,
+    scan_parallelism: int | None = None,
+    row_mask: Callable[[pd.DataFrame], list[bool]] | None = None,
+) -> DataFrame:
+    """Fused worker-side parquet scan: the only rows the JVM sees are the
+    manifest's file paths, built through Arrow (session.local_frame) and
+    spread round-robin over scan_parallelism tasks; each task opens its
+    files with pyarrow and streams bounded row-group batches through
+    per_pdf, so heavy binary columns stay inside the Python worker.
+    row_mask, when given, drops rows before per_pdf sees them (empty
+    batches are skipped).
+
+    scan_parallelism: concurrent scan tasks. Default: min(files, session
+    parallelism, $SPARK_GRAFT_SCAN_PAR or 8). The cap exists because on a
+    host whose kernel serializes page faults/file I/O globally, decode
+    throughput INVERTS beyond ~8 concurrent readers (measured at local[32]:
+    8-way 1,340-1,370 clips/s vs 16-way 814-917 on the identical job;
+    BASELINE.md "Sandbox scaling protocol"); on a real cluster set
+    SPARK_GRAFT_SCAN_PAR high — the operator itself is width-agnostic and
+    each task streams row groups at bounded memory.
+    """
+    from ..session import local_frame
+
+    if scan_parallelism is None:
+        cap = int(os.environ.get("SPARK_GRAFT_SCAN_PAR", "8"))
+        scan_parallelism = min(len(manifest), spark.sparkContext.defaultParallelism, cap)
+    paths = local_frame(spark, pd.DataFrame({"path": pd.Series(manifest, dtype=object)}), "path string")
+
+    def _scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        import pyarrow.parquet as pq
+
+        for b in batches:
+            for path in b["path"]:
+                # memory_map: page-cache-resident files skip the read()
+                # syscall path entirely (measured 13x at 32-way concurrency)
+                pf = pq.ParquetFile(path, memory_map=True)
+                for rb in pf.iter_batches(batch_size=batch_rows, columns=columns):
+                    pdf = rb.to_pandas()
+                    if row_mask is not None:
+                        pdf = pdf[row_mask(pdf)]
+                        if not len(pdf):
+                            continue
+                    yield per_pdf(pdf)
+
+    return paths.repartition(max(scan_parallelism, 1)).mapInPandas(_scan, schema=schema)
+
+
+def _parts_mask(
+    n_parts: int, parts_filter: list[int] | None
+) -> Callable[[pd.DataFrame], list[bool]] | None:
+    """Row mask keeping the clips whose part_id is in parts_filter."""
+    if parts_filter is None:
+        return None
+    wanted = {int(p) for p in parts_filter}
+    return lambda pdf: [zlib.crc32(c.encode("utf-8")) % n_parts in wanted for c in pdf["clip_id"]]
+
+
 def scan_labels(
     spark: SparkSession,
     manifest: list[str],
@@ -219,33 +282,11 @@ def scan_labels(
     """Fully-fused pipeline: parquet manifest -> final labels in ONE
     mapInPandas stage (scan+rules+decode+langid+ppl+scrub). Same label
     output as the staged chain (tests/test_scan_decode.py)."""
-    if scan_parallelism is None:
-        cap = int(os.environ.get("SPARK_GRAFT_SCAN_PAR", "8"))
-        scan_parallelism = max(1, min(len(manifest), spark.sparkContext.defaultParallelism, cap))
-    paths = spark.createDataFrame([(p,) for p in manifest], "path string").repartition(
-        max(scan_parallelism, 1)
+    return manifest_scan(
+        spark, manifest, lambda pdf: label_batch_pdf(pdf, n_parts), LABELS_SCHEMA,
+        batch_rows=batch_rows, scan_parallelism=scan_parallelism,
+        row_mask=_parts_mask(n_parts, parts_filter),
     )
-    wanted = None if parts_filter is None else set(int(p) for p in parts_filter)
-
-    def _scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pyarrow.parquet as pq
-
-        for b in batches:
-            for path in b["path"]:
-                pf = pq.ParquetFile(path, memory_map=True)
-                for rb in pf.iter_batches(batch_size=batch_rows, columns=CLIP_COLUMNS):
-                    pdf = rb.to_pandas()
-                    if wanted is not None:
-                        keep_mask = [
-                            zlib.crc32(c.encode("utf-8")) % n_parts in wanted
-                            for c in pdf["clip_id"]
-                        ]
-                        pdf = pdf[keep_mask]
-                        if not len(pdf):
-                            continue
-                    yield label_batch_pdf(pdf, n_parts)
-
-    return paths.mapInPandas(_scan, schema=LABELS_SCHEMA)
 
 
 def scan_rules_decode(
@@ -264,41 +305,11 @@ def scan_rules_decode(
     worker-side right after part_id is computed, before decode, so resumed
     runs do not decode already-done partitions.
 
-    scan_parallelism: concurrent scan tasks. Default: min(files, session
-    parallelism, $SPARK_GRAFT_SCAN_PAR or 8). The cap exists because this
-    sandbox's kernel serializes page faults/file I/O globally and decode
-    throughput INVERTS beyond ~8 concurrent readers (measured at local[32]:
-    8-way 1,340-1,370 clips/s vs 16-way 814-917 on the identical job;
-    BASELINE.md "Sandbox scaling protocol"); on a real cluster set SPARK_GRAFT_SCAN_PAR high or
-    pass None-equivalent explicitly — the operator itself is width-agnostic
-    and each task streams row groups at bounded memory.
+    scan_parallelism: see manifest_scan.
     """
-    if scan_parallelism is None:
-        cap = int(os.environ.get("SPARK_GRAFT_SCAN_PAR", "8"))
-        scan_parallelism = max(1, min(len(manifest), spark.sparkContext.defaultParallelism, cap))
-    paths = spark.createDataFrame([(p,) for p in manifest], "path string").repartition(
-        max(scan_parallelism, 1)
+    scanned = manifest_scan(
+        spark, manifest, lambda pdf: _rules_decode_pdf(pdf, n_parts), POST_DECODE_SCHEMA,
+        batch_rows=batch_rows, scan_parallelism=scan_parallelism,
+        row_mask=_parts_mask(n_parts, parts_filter),
     )
-    wanted = None if parts_filter is None else set(int(p) for p in parts_filter)
-
-    def _scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pyarrow.parquet as pq
-
-        for b in batches:
-            for path in b["path"]:
-                # memory_map: page-cache-resident files skip the sandboxed
-                # read() path entirely (measured 13x at 32-way concurrency)
-                pf = pq.ParquetFile(path, memory_map=True)
-                for rb in pf.iter_batches(batch_size=batch_rows, columns=CLIP_COLUMNS):
-                    pdf = rb.to_pandas()
-                    if wanted is not None:
-                        keep_mask = [
-                            zlib.crc32(c.encode("utf-8")) % n_parts in wanted
-                            for c in pdf["clip_id"]
-                        ]
-                        pdf = pdf[keep_mask]
-                        if not len(pdf):
-                            continue
-                    yield _rules_decode_pdf(pdf, n_parts)
-
-    return decode_epilogue(paths.mapInPandas(_scan, schema=POST_DECODE_SCHEMA))
+    return decode_epilogue(scanned)

@@ -1,8 +1,8 @@
 """The composed curation pipeline: rules -> decode -> langid -> ppl -> scrub.
 
-One narrow Spark chain (zero shuffles until the metrics rollup), partition-
-level checkpoint/resume, per-partition lineage and salted per-(lang, codec)
-metrics side tables.
+One narrow Spark chain (zero shuffles until the commit rollup), partition-
+level checkpoint/resume, per-partition lineage and per-(lang, codec) metrics
+side tables.
 
 Scale design (10^12 clips / 1000 executors):
   * part_id = crc32(clip_id) % n_parts — uniform hash partitioning; the
@@ -20,9 +20,14 @@ Scale design (10^12 clips / 1000 executors):
     stale labels directory dropped explicitly after the overwrite (the
     parquet-mode analogue of the Iceberg MERGE / reference INSERT OR
     REPLACE upsert).
-  * metrics rollup: two-phase salted aggregation (partial on (lang, codec,
-    salt), final on (lang, codec)) so the Zipf-hot language bucket cannot
-    straggle a reducer; AQE skew handling stays on as backstop.
+  * commit rollup: after the write, ONE aggregate over the committed
+    pending partitions, keyed (part_id, lang, codec, drop_stage), is
+    collected and folded on the driver into the lineage rows, the metrics
+    rows, the labeled-row count and the non-empty parts (fold_rollup). Its
+    key leads with the uniform part_id, so the Zipf-hot (en, pcm16) bucket
+    is split n_parts ways across reducers without a salt; the result is at
+    most n_parts x langs x codecs x 6 rows. The side-table and checkpoint
+    frames are built from pandas through Arrow (session.local_frame).
 """
 
 from __future__ import annotations
@@ -31,13 +36,15 @@ import os
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+import pandas as pd
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .core import rules as R
 from .logging_config import configure, stage_timer
 from .operators.rules import with_rule_stage
 from .operators.stages import decode_stage, langid_stage, ppl_stage, scrub_stage
+from .session import local_frame
 from .tables import TableLayer
 
 LABEL_COLS = [
@@ -64,6 +71,16 @@ _FP_ANY = "<unfingerprinted>"
 _CP_SCHEMA = (
     "part_id int, status string, run_id string, had_rows int, "
     "fingerprint string, n_parts int"
+)
+
+# side-table rows folded on the driver (fold_rollup); run_id and ts are added
+# as columns. Types match a Spark aggregate: counts and sums are bigint.
+_LINEAGE_SCHEMA = "part_id int, n_in bigint, n_keep bigint, " + ", ".join(
+    f"drop_{s} bigint" for s in R.STAGES
+)
+_METRICS_SCHEMA = (
+    "lang string, codec string, n bigint, n_keep bigint, pii_total bigint, "
+    "tox_total bigint, keep_rate double"
 )
 
 
@@ -125,7 +142,57 @@ def label_clips_fused(
 
 
 def _set_arrow_batch(spark: SparkSession) -> None:
+    # Arrow on: driver-side frames (session.local_frame) then skip the
+    # pickled-RDD path even in a session not built by session.get_spark
+    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH))
+
+
+def lang_bucket() -> Column:
+    """The metrics language key: unscored clips (dropped before langid, or
+    langid found no language) share the '?' bucket, in batch and streaming
+    metrics alike."""
+    return F.coalesce(F.col("lang"), F.lit("?"))
+
+
+def _sql_sum(g) -> pd.DataFrame:
+    # SQL SUM: null over a group whose values are all null
+    return g.sum(min_count=1).astype("Int64").reset_index()
+
+
+def fold_rollup(roll: pd.DataFrame) -> tuple[pd.DataFrame, pd.DataFrame]:
+    """Fold the (part_id, lang, codec, drop_stage) rollup into the lineage
+    rows (one per part) and the metrics rows (one per lang, codec), with the
+    values a direct Spark aggregate over the same labels would give: a
+    drop_<stage> column is null for a part whose clips were all kept and 0
+    where clips dropped only at other stages; pii/tox totals are null for a
+    group of rows never scrubbed."""
+    ds = roll["drop_stage"]
+    drops = {
+        f"drop_{s}": roll["n"].where(ds == s, 0).where(ds.notna()) for s in R.STAGES
+    }
+    per_part = roll[["part_id"]].assign(n_in=roll["n"], n_keep=roll["n_keep"], **drops)
+    lineage = _sql_sum(per_part.groupby("part_id"))
+    metrics = _sql_sum(
+        roll.groupby(["lang", "codec"], dropna=False)[["n", "n_keep", "pii_total", "tox_total"]]
+    )
+    metrics["keep_rate"] = metrics["n_keep"] / metrics["n"]
+    return lineage, metrics
+
+
+def _checkpoint_frame(
+    spark: SparkSession,
+    parts: list[int],
+    run_id: str,
+    had_rows: list[int],
+    fingerprints: list[str],
+    n_parts: int,
+) -> DataFrame:
+    pdf = pd.DataFrame({
+        "part_id": parts, "status": "done", "run_id": run_id,
+        "had_rows": had_rows, "fingerprint": fingerprints, "n_parts": n_parts,
+    })
+    return local_frame(spark, pdf, _CP_SCHEMA).withColumn("ts", F.current_timestamp())
 
 
 def run_pipeline(
@@ -231,10 +298,10 @@ def run_pipeline(
                 }
                 adopted = [p for p, f in stored.items() if f == _FP_ANY and p in fps]
                 if adopted:
-                    adopt = spark.createDataFrame(
-                        [(int(p), "done", run_id, 1, fps[p], n_parts) for p in adopted],
-                        _CP_SCHEMA,
-                    ).withColumn("ts", F.current_timestamp())
+                    adopt = _checkpoint_frame(
+                        spark, adopted, run_id, had_rows=[1] * len(adopted),
+                        fingerprints=[fps[p] for p in adopted], n_parts=n_parts,
+                    )
                     tl.append(adopt.coalesce(1), "checkpoints")
             # checkpoints written before fingerprints existed: treat all as
             # stale (recompute is idempotent; serving stale labels is not)
@@ -276,62 +343,40 @@ def run_pipeline(
             )
             tl.drop_partitions("labels", "part_id", emptied)
 
-    # ---- lineage: per-partition counts + stage drop breakdown (one shuffle,
-    # uniform key => no skew concern). Explicit schema: stays well-defined
-    # even when this run labeled zero rows.
-    lab = tl.read(spark, "labels", schema=labels.schema).filter(F.col("part_id").isin(pending))
-    lineage = lab.groupBy("part_id").agg(
-        F.count("*").alias("n_in"),
-        F.sum(F.col("keep").cast("long")).alias("n_keep"),
-        *[
-            F.sum((F.col("drop_stage") == s).cast("long")).alias(f"drop_{s}")
-            for s in R.STAGES
-        ],
-    ).withColumns({"run_id": F.lit(run_id), "ts": F.current_timestamp()})
-    with stage_timer(log, "lineage", run_id=run_id):
-        tl.append(lineage, "lineage")
-
-    # ---- metrics: per-(lang, codec) keep rates; two-phase salted agg for the
-    # Zipf-hot (en, pcm16) bucket. codec rides along in labels, so no join
-    # back against the (huge) clips table is ever needed.
-    salt = F.pmod(F.crc32(F.col("clip_id").cast("binary")), F.lit(16))
-    partial = lab.groupBy(
-        F.coalesce(F.col("lang"), F.lit("?")).alias("lang"), F.col("codec"), salt.alias("_salt")
+    # ---- one rollup over the committed pending partitions feeds every side
+    # table. Reading the table back (not the in-flight frame) keeps lineage a
+    # description of what the table holds. At most n_parts x langs x codecs
+    # x 6 rows reach the driver; keyed by the uniform part_id, the Zipf-hot
+    # (en, pcm16) bucket is already split n_parts ways before the fold.
+    lab = tl.read_partitions(spark, "labels", "part_id", pending, labels.schema)
+    roll = lab.groupBy(
+        "part_id", lang_bucket().alias("lang"), "codec", "drop_stage"
     ).agg(
         F.count("*").alias("n"),
         F.sum(F.col("keep").cast("long")).alias("n_keep"),
         F.sum("pii_count").alias("pii_total"),
         F.sum("tox_count").alias("tox_total"),
-    )
-    metrics = (
-        partial.groupBy("lang", "codec")
-        .agg(
-            F.sum("n").alias("n"),
-            F.sum("n_keep").alias("n_keep"),
-            F.sum("pii_total").alias("pii_total"),
-            F.sum("tox_total").alias("tox_total"),
-        )
-        .withColumns({
-            "keep_rate": F.col("n_keep") / F.col("n"),
-            "run_id": F.lit(run_id),
-            "ts": F.current_timestamp(),
-        })
-    )
+    ).toPandas()
+    lineage, metrics = fold_rollup(roll)
+    side = {"run_id": F.lit(run_id), "ts": F.current_timestamp()}
+
+    with stage_timer(log, "lineage", run_id=run_id):
+        tl.append(local_frame(spark, lineage, _LINEAGE_SCHEMA).withColumns(side), "lineage")
     with stage_timer(log, "metrics", run_id=run_id):
-        tl.append(metrics, "metrics")
+        tl.append(local_frame(spark, metrics, _METRICS_SCHEMA).withColumns(side), "metrics")
 
     # ---- checkpoints last (a crash before this point leaves parts pending =>
     # they are recomputed and idempotently overwritten on resume)
-    n_labeled = lab.count()
-    counted = {r.part_id for r in lab.select("part_id").distinct().collect()}
-    cp = spark.createDataFrame(
-        [
-            (int(p), "done", run_id, int(p in counted),
-             fps.get(p, _FP_EMPTY) if fingerprint else _FP_ANY, n_parts)
-            for p in pending
-        ],
-        _CP_SCHEMA,
-    ).withColumn("ts", F.current_timestamp())
+    n_labeled = int(lineage["n_in"].sum())
+    counted = set(lineage["part_id"].tolist())
+    cp = _checkpoint_frame(
+        spark,
+        pending,
+        run_id,
+        had_rows=[int(p in counted) for p in pending],
+        fingerprints=[fps.get(p, _FP_EMPTY) if fingerprint else _FP_ANY for p in pending],
+        n_parts=n_parts,
+    )
     # coalesce(1): the done-marker lands as ONE parquet file, so the commit
     # is a single atomic rename (no partially-visible checkpoint append)
     tl.append(cp.coalesce(1), "checkpoints")

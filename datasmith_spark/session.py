@@ -9,8 +9,12 @@ at runtime (spark.conf.set) so entry() works under a driver-created session.
 from __future__ import annotations
 
 import os
+from typing import TYPE_CHECKING
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+if TYPE_CHECKING:
+    import pandas as pd
 
 # Keep freed large buffers in the glibc heap instead of munmap/mmap churn.
 # Numpy temporaries >128 KiB otherwise hit a fresh mmap + page-fault storm per
@@ -106,3 +110,13 @@ def get_spark(
     )
     os.makedirs("/root/repo/.data/tmp", exist_ok=True)
     return b.getOrCreate()
+
+
+def local_frame(spark: SparkSession, pdf: pd.DataFrame, schema: str) -> DataFrame:
+    """DataFrame over driver-side rows: a pandas frame plus a DDL schema.
+
+    With spark.sql.execution.arrow.pyspark.enabled (set by get_spark and by
+    pipeline.run_pipeline) the rows reach the JVM as Arrow batches and become
+    a local relation. A Python list would instead become a pickled RDD that
+    every job reading the frame decodes in Python workers."""
+    return spark.createDataFrame(pdf, schema=schema)

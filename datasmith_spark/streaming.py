@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .datagen import CLIPS_SCHEMA_DDL
-from .pipeline import ARROW_BATCH, LABEL_COLS, label_clips
+from .pipeline import ARROW_BATCH, LABEL_COLS, label_clips, lang_bucket
 from .tables import TableLayer
 
 
@@ -296,7 +296,7 @@ def make_batch_sink(tl: TableLayer):
                 .parquet(tl.path("labels"))
             )
             metrics = (
-                batch_df.groupBy("lang", "codec")
+                batch_df.groupBy(lang_bucket().alias("lang"), "codec")
                 .agg(
                     F.count("*").alias("n"),
                     F.sum(F.col("keep").cast("long")).alias("n_keep"),

@@ -135,6 +135,32 @@ class TableLayer:
         reader = spark.read.schema(schema) if schema is not None else spark.read
         return reader.parquet(self.path(name))
 
+    def read_partitions(
+        self, spark: SparkSession, name: str, partition_col: str, values, schema
+    ) -> DataFrame:
+        """Rows of the given partitions of a partitioned table. Path mode
+        lists only those partition directories (the table is the basePath,
+        so partition_col stays a column), not the whole table: a resume that
+        rewrote 13 of 64 parts lists 13 directories. They are listed on the
+        driver even past parallelPartitionDiscovery.threshold (32 paths):
+        path mode is a local filesystem, where reading 64 label partitions
+        took ~0.12 s listed on the driver against ~0.47 s through Spark's
+        distributed listing job (4-vCPU host)."""
+        vals = [int(v) for v in values]
+        if self.catalog is None:
+            dirs = [os.path.join(self.path(name), f"{partition_col}={v}") for v in vals]
+            dirs = [d for d in dirs if os.path.isdir(d)]
+            if dirs:
+                conf = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+                old = spark.conf.get(conf)
+                spark.conf.set(conf, str(max(int(old), len(dirs))))
+                try:  # the listing runs here, as the relation resolves
+                    reader = spark.read.schema(schema).option("basePath", self.path(name))
+                    return reader.parquet(*dirs)
+                finally:
+                    spark.conf.set(conf, old)
+        return self.read(spark, name, schema=schema).filter(F.col(partition_col).isin(vals))
+
     def write_bucketed(
         self, df: DataFrame, name: str, key: str, n_buckets: int = 32
     ) -> None:

@@ -37,7 +37,9 @@ def cache_dir() -> pathlib.Path:
 def spark():
     from datasmith_spark.session import get_spark
 
-    s = get_spark(app="datasmith-tests", cores=8, driver_mem="16g")
+    # cores from $SPARK_GRAFT_CPUS (get_spark's default); get_spark pre-touches
+    # the whole heap, so it must fit a 16 GB host beside the Python workers
+    s = get_spark(app="datasmith-tests", driver_mem="4g")
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()

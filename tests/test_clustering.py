@@ -199,3 +199,19 @@ class TestKmeansQuality:
         # the 4 midpoint stragglers sit near the decision surface of the
         # two blob centroids -> exactly they flag as boundary
         assert out.n_boundary.sum() == 4
+
+    def test_single_centroid_has_null_boundary(self, spark):
+        """k=1: no point has a second-closest centroid, so d2 is null and
+        n_boundary is null; n and sse still cover every point."""
+        import numpy as np
+
+        from datasmith_spark.operators.clustering import kmeans_assign, kmeans_quality
+
+        rng = np.random.default_rng(3)
+        rows = [(i, [float(x) for x in v]) for i, v in enumerate(rng.normal(0, 0.1, size=(12, 64)))]
+        embs = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+        out = kmeans_quality(embs, k=1, iters=2).toPandas()
+        assert len(out) == 1 and out.cluster.iat[0] == 0 and out.n.iat[0] == 12
+        assert out.n_boundary.isna().all()
+        a = kmeans_assign(embs, k=1, iters=2).toPandas()
+        assert out.sse.iat[0] == int(a.dist.sum())

@@ -9,10 +9,11 @@ from __future__ import annotations
 import pathlib
 import shutil
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from datasmith_spark.pipeline import LABEL_COLS, label_clips
+from datasmith_spark.pipeline import LABEL_COLS, label_clips, run_pipeline
 from datasmith_spark.streaming import run_streaming_pipeline
 from tests.conftest import cache_dir
 
@@ -38,7 +39,7 @@ def stream_dirs(spark, clips_path):
     return str(inp), str(out)
 
 
-def test_stream_matches_batch(spark, clips_path, stream_dirs):
+def test_stream_matches_batch(spark, clips_path, stream_dirs, tmp_path):
     inp, out = stream_dirs
     shutil.rmtree(out, ignore_errors=True)
     run_streaming_pipeline(spark, inp, out, n_parts=N_PARTS, max_files_per_trigger=4)
@@ -64,6 +65,21 @@ def test_stream_matches_batch(spark, clips_path, stream_dirs):
     # metrics side table written per batch
     m = spark.read.parquet(f"{out}/metrics")
     assert m.count() > 0 and m.filter(F.col("run_id").startswith("stream-")).count() > 0
+    # summed over batches, the streaming metrics equal the batch run's,
+    # unscored clips in the same '?' lang bucket
+    sums = [F.sum(c).alias(c) for c in ("n", "n_keep", "pii_total", "tox_total")]
+    keys = ["lang", "codec"]
+    stream_m = m.groupBy(*keys).agg(*sums).toPandas()
+    batch_out = str(tmp_path / "batch")
+    run_pipeline(spark, spark.read.parquet(clips_path), batch_out, n_parts=N_PARTS,
+                 fingerprint=False)
+    batch_m = spark.read.parquet(f"{batch_out}/metrics").groupBy(*keys).agg(*sums).toPandas()
+    assert "?" in set(batch_m["lang"]) and not stream_m["lang"].isna().any()
+    a, b = (
+        x.sort_values(keys, na_position="last").reset_index(drop=True).astype(object)
+        for x in (stream_m, batch_m)
+    )
+    pd.testing.assert_frame_equal(a.where(a.notna(), None), b.where(b.notna(), None))
 
 
 def test_stream_restart_is_noop(spark, stream_dirs):
